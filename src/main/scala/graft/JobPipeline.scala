@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.VectorKernels._
 import graft.plans.Pipeline
 import graft.sources.ReportSink
 
@@ -14,11 +13,15 @@ import graft.sources.ReportSink
   * a re-run resumes from the last committed stage.
   *
   * Stage 4 picks its physical strategy by corpus size
-  * (GraftConf.exactPairCutoff): the exact kernel join below the cutoff
-  * (the reference's own Faiss search is exhaustive within each probed
-  * cell at its 90k scale), the LSH bucket-join candidate path + exact
-  * verify above it — the same ANN-over-brute-force trade the reference
-  * makes with its `IVF100,Flat` default (app/main.py:201-280, .env:7).
+  * (GraftConf.exactPairCutoff): below the cutoff, the exact all-pairs
+  * block join (Similarity.exactPairs: vectors hashed into blocks, a
+  * nested-loop join over block pairs, a register-tiled cosine loop per
+  * block pair; the reference's own Faiss search is exhaustive within
+  * each probed cell at its 90k scale); above it, the LSH bucket-join
+  * candidate path + exact verify — the same ANN-over-brute-force trade
+  * the reference makes with its `IVF100,Flat` default
+  * (app/main.py:201-280, .env:7). Stage 4's commit records the
+  * threshold, so a re-run at another threshold recomputes the pairs.
   */
 object JobPipeline {
 
@@ -72,16 +75,19 @@ object JobPipeline {
     // make N² the wrong plan at a low row count); above either bound,
     // LSH candidate generation keeps the join bucketed. Stats come from
     // the cached TableStats relation over the staged parquet (footer
-    // metadata + fs summary, never a data scan).
+    // metadata + fs summary, never a data scan). The commit's fingerprint
+    // is the threshold: pairs committed at another τ are recomputed.
     val s3Stats = plans.TableStats.forParquet(spark, s"$workDir/s3_index")
-    val pairs = pipe.stage("s4_pairs") {
-      if (s3Stats.rows <= GraftConf.exactPairCutoff(spark) &&
-          s3Stats.bytes <= GraftConf.exactPairMaxBytes(spark)) {
-        val a = indexed.select(col("doc_id").as("id1"), col("embedding").as("v1"))
-        val b = indexed.select(col("doc_id").as("id2"), col("embedding").as("v2"))
-        a.join(b, col("id1") < col("id2"))
-          .select(col("id1"), col("id2"),
-            round(cosineFast(col("v1"), col("v2")), 4).as("sim"))
+    val pairs = pipe.stage("s4_pairs", fingerprint = s"threshold=$threshold") {
+      val exact = s3Stats.rows <= GraftConf.exactPairCutoff(spark) &&
+        s3Stats.bytes <= GraftConf.exactPairMaxBytes(spark)
+      println(s"[graft] JobPipeline s4_pairs: rows=${s3Stats.rows} " +
+        s"(exactCutoff ${GraftConf.exactPairCutoff(spark)}), bytes=${s3Stats.bytes} " +
+        s"(cutoff ${GraftConf.exactPairMaxBytes(spark)}), threshold=$threshold -> " +
+        (if (exact) s"exact, nb=${operators.Similarity.exactPairBlocks(spark)}" else "lsh"))
+      if (exact) {
+        operators.Similarity.exactPairs(indexed, "doc_id", "embedding", threshold)
+          .select(col("id1"), col("id2"), round(col("cos"), 4).as("sim"))
           .filter(col("sim") >= threshold)
       } else {
         operators.Ann.lshNearDupFrame(indexed, "doc_id", "embedding",
@@ -100,12 +106,13 @@ object JobPipeline {
     sorted
   }
 
-  /** CLI entry: JobPipeline <sfDir> <workDir> [threshold]. */
+  /** CLI entry: JobPipeline <sfDir> <workDir> [threshold], the threshold
+    * defaulting to the reference's 0.90 (app/main.py:252-263). */
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val workDir = if (args.length > 1) args(1)
       else java.nio.file.Files.createTempDirectory("graft_jobpipe").toString
-    val threshold = if (args.length > 2) args(2).toDouble else 0.5
+    val threshold = if (args.length > 2) args(2).toDouble else 0.90
     val spark = SparkSession.builder()
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
       .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))

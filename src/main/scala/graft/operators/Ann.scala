@@ -348,9 +348,12 @@ object Ann {
     val b = hashed.select(col(idCol).as("id2"), col(embCol).as("v2"),
       col("ht"), col("bucket"))
       .withColumn("salt", explode(array((0 until salts).map(lit): _*)))
-    // verify BEFORE dedup: the kernel is ~100ns/pair, so re-verifying a
-    // pair that collides in several tables is far cheaper than shuffling
-    // two 64-float vectors per candidate through a dropDuplicates exchange
+    // verify BEFORE dedup: a pair that collides in several tables is
+    // scored once per collision, but the dropDuplicates exchange then
+    // moves (id1, id2, sim) rows, not two vectors per candidate. A scored
+    // candidate costs its joined row more than its kernel: on 384-d
+    // doubles cosineFast alone is 84-129 ns/pair, a join that carries one
+    // row per pair 6.1-8.4 us/pair (perfbench/README.md finding 1)
     val parts = hashed.sparkSession.sessionState.conf.numShufflePartitions
     a.repartition(parts, col("ht"), col("bucket"), col("salt"))
       .join(b.repartition(parts, col("ht"), col("bucket"), col("salt")),
@@ -503,7 +506,7 @@ object Ann {
     "q150_multiprobe_recall",
     "J1b ext quality gate",
     (s, d) => {
-      val exact = Similarity.nearDupPairs(s, d, 0.35, prefilterLabel = false)
+      val exact = Similarity.nearDupPairs(s, d, 0.35)
         .select(col("id1").as("qid"), col("id2").as("nid"))
       val ann = lshMultiProbeNearDup(s, d, 0.35)
         .select(col("id1").as("qid"), col("id2").as("nid"))
@@ -516,7 +519,7 @@ object Ann {
     "q37_lsh_recall",
     "J1b quality gate",
     (s, d) => {
-      val exact = Similarity.nearDupPairs(s, d, 0.35, prefilterLabel = false)
+      val exact = Similarity.nearDupPairs(s, d, 0.35)
         .select(col("id1").as("qid"), col("id2").as("nid"))
       val ann = lshNearDup(s, d, 0.35)
         .select(col("id1").as("qid"), col("id2").as("nid"))
@@ -539,7 +542,7 @@ object Ann {
     "q57_ivf_pair_recall",
     "J1c quality gate",
     (s, d) => {
-      val exact = Similarity.nearDupPairs(s, d, 0.35, prefilterLabel = false)
+      val exact = Similarity.nearDupPairs(s, d, 0.35)
         .select(col("id1").as("qid"), col("id2").as("nid"))
       val ann = ivfNearDup(s, d, 0.35, nprobe = 4)
         .select(col("id1").as("qid"), col("id2").as("nid"))

@@ -3,7 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.ArrayType
 import graft.{GraftConf, GraftQuery, Tables}
+import graft.functions.{BlockPair, CosineBlocks}
 import graft.functions.VectorFunctions._
 import graft.functions.VectorKernels._
 
@@ -54,23 +56,83 @@ object Similarity {
   /** All near-duplicate pairs at cosine >= threshold, canonicalized
     * (id1 < id2) and deduplicated — the reference's end product
     * (app/main.py:252-263: threshold 0.90, canonical pair set, sort).
-    * Label equi-prefilter plays the role of the IVF cell: vectors produced
-    * from the same cluster are the only plausible near-dups, so the join is
-    * an equi-join, not a cross join. The unfiltered exact variant is
-    * `entry`'s flagship on sf0.001. */
-  def nearDupPairs(s: SparkSession, d: String, threshold: Double,
-      prefilterLabel: Boolean): DataFrame = {
-    val base = graft.plans.Spread(Tables.embeddings(s, d))
-    val a = base.select(col("vec_id").as("id1"), col("label").as("lab1"), col("embedding").as("v1"))
-    val b = base.select(col("vec_id").as("id2"), col("label").as("lab2"), col("embedding").as("v2"))
-    val joinCond =
-      if (prefilterLabel) col("id1") < col("id2") && col("lab1") === col("lab2")
-      else col("id1") < col("id2")
-    a.join(b, joinCond)
-      .select(col("id1"), col("id2"), cosineFast(col("v1"), col("v2")).as("sim"))
-      .filter(col("sim") >= threshold)
-      .select(col("id1"), col("id2"), round(col("sim"), 4).as("sim"))
+    * Exact all-pairs through [[exactPairs]]: raw cos >= threshold, then
+    * rounded to 4 dp. `entry`'s flagship on sf0.001. */
+  def nearDupPairs(s: SparkSession, d: String, threshold: Double): DataFrame =
+    exactPairs(Tables.embeddings(s, d), "vec_id", "embedding", threshold)
+      .filter(col("cos") >= threshold)
+      .select(col("id1"), col("id2"), round(col("cos"), 4).as("sim"))
       .orderBy(col("sim").desc, col("id1"), col("id2"))
+
+  /** Block count of [[exactPairs]], from the session's parallelism:
+    * 4·P − 1 blocks, so the streamed side spreads about four blocks per
+    * core, and an odd count, so the circulant pairing below gives every
+    * block the same number of partners. */
+  private[graft] def exactPairBlocks(s: SparkSession): Int =
+    4 * s.sparkContext.defaultParallelism - 1
+
+  /** Exact all-pairs cosine threshold join over any (integral id, numeric
+    * vector) frame — the reference's exhaustive self-search
+    * (app/vector_search.py:143-205) scored block by block instead of one
+    * joined row per pair.
+    *
+    * Rows with a non-null id and vector are hashed into `nb` blocks
+    * (pmod(xxhash64(id), nb)), each collected into one row: an id
+    * array, a row-length array and the vectors flattened into one
+    * `ARRAY<DOUBLE>`. The blocks self-join through a nested-loop join
+    * whose condition keeps each unordered block pair once, itself
+    * included: block a meets a, a+1, …, a+⌊nb/2⌋ (mod nb), and an even
+    * nb's tie at exactly nb/2 is kept from the smaller block. So the join
+    * emits nb(nb+1)/2 rows, not N(N−1)/2, and for odd nb every streamed
+    * block meets the same number of blocks. The join is a
+    * BroadcastNestedLoopJoin while the vectors fit the broadcast
+    * threshold and a CartesianProduct above it. A typed flatMap scores
+    * each block pair with [[graft.functions.CosineBlocks]].
+    *
+    * Returns (id1, id2, cos), id1 < id2 in the id column's type, with
+    * `cos` bit-identical to `cosineFast(v1, v2)`. A pair is emitted
+    * unless cos < threshold − 1e-4: a superset of both `cos >= τ` and
+    * `round(cos, 4) >= τ` that still passes a NaN, so each caller applies
+    * its own Spark filter and rounding unchanged. */
+  def exactPairs(vecs: DataFrame, idCol: String, vecCol: String,
+      threshold: Double): DataFrame =
+    exactPairs(vecs, idCol, vecCol, threshold, exactPairBlocks(vecs.sparkSession))
+
+  private[graft] def exactPairs(vecs: DataFrame, idCol: String, vecCol: String,
+      threshold: Double, nb: Int): DataFrame = {
+    val s = vecs.sparkSession
+    import s.implicits._
+    val idType = vecs.schema(idCol).dataType
+    // null elements count as 0, as in cosineFast; zeroed here only when
+    // the type admits them, so the primitive decode below never sees one
+    val v = col(vecCol).cast("array<double>")
+    val dense = vecs.schema(vecCol).dataType match {
+      case ArrayType(_, true) => transform(v, x => coalesce(x, lit(0.0)))
+      case _ => v
+    }
+    val blocks = vecs
+      .filter(col(idCol).isNotNull && col(vecCol).isNotNull)
+      .select(col(idCol).cast("long").as("id"), dense.as("v"))
+      .groupBy(pmod(xxhash64(col("id")), lit(nb.toLong)).cast("int").as("bid"))
+      .agg(collect_list(struct(col("id"), size(col("v")).as("n"), col("v"))).as("rows"))
+      .select(col("bid"), col("rows.id").as("ids"), col("rows.n").as("lens"),
+        flatten(col("rows.v")).as("mat"))
+    def side(k: Int) = blocks.select(blocks.columns.map(c => col(c).as(s"$c$k")).toSeq: _*)
+    val delta = pmod(col("bid2") - col("bid1"), lit(nb))
+    // the blocks hold all N·d doubles, so they are broadcast only while
+    // the vectors' size estimate is under autoBroadcastJoinThreshold, the
+    // rule the row-per-pair join was planned by; above it Spark plans the
+    // block pairs without collecting them on the driver
+    val limit = s.sessionState.conf.autoBroadcastJoinThreshold
+    val small = limit >= 0 && vecs.queryExecution.optimizedPlan.stats.sizeInBytes <= limit
+    val floor = threshold - 1e-4
+    graft.plans.Spread(side(1))
+      .join(if (small) broadcast(side(2)) else side(2),
+        delta * 2 < nb || (delta * 2 === nb && col("bid1") < col("bid2")))
+      .as[BlockPair]
+      .flatMap(CosineBlocks.score(_, floor))
+      .toDF("id1", "id2", "cos")
+      .select(col("id1").cast(idType).as("id1"), col("id2").cast(idType).as("id2"), col("cos"))
   }
 
   /** Scale-aware near-dup pair search: exact all-pairs only while BOTH
@@ -116,7 +178,7 @@ object Similarity {
       s"threshold=$threshold (loose<${GraftConf.loosePairThreshold(s)}), " +
       s"avgRowBytes=${st.avgRowBytes.toLong} -> $tier")
     tier match {
-      case "exact" => nearDupPairs(s, d, threshold, prefilterLabel = false)
+      case "exact" => nearDupPairs(s, d, threshold)
       case "ivf" => Ann.ivfNearDup(s, d, threshold, GraftConf.ivfNprobe(s))
       case "multiprobe-lsh" => Ann.lshMultiProbeNearDup(s, d, threshold)
       case "lsh" => Ann.lshNearDup(s, d, threshold)
@@ -187,7 +249,7 @@ object Similarity {
   val q31NearDupPairs = GraftQuery(
     "q31_neardup_pairs",
     "D5,J1a,P5,P6,D4,T1,F9,F10",
-    (s, d) => nearDupPairs(s, d, threshold = 0.35, prefilterLabel = false),
+    (s, d) => nearDupPairs(s, d, threshold = 0.35),
     Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS embedding FROM embeddings)
       SELECT a.vec_id AS id1, b.vec_id AS id2,
         round(list_cosine_similarity(a.embedding, b.embedding), 4) AS sim

@@ -1,5 +1,7 @@
 package graft.plans
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
@@ -26,18 +28,32 @@ final class Pipeline(spark: SparkSession, root: String) {
   private def fs(p: Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** True if the stage has committed output. */
-  def isDone(name: String): Boolean = {
+  /** True if the stage has committed output — under `fingerprint`, the
+    * content its done marker was written with. */
+  def isDone(name: String, fingerprint: String = ""): Boolean = {
     val m = doneMarker(name)
-    fs(m).exists(m)
+    val f = fs(m)
+    f.exists(m) && {
+      val in = f.open(m)
+      try new String(in.readAllBytes(), UTF_8) == fingerprint finally in.close()
+    }
   }
 
-  /** Run (or skip) a stage: returns the materialized stage output. */
-  def stage(name: String)(compute: => DataFrame): DataFrame = {
-    if (!isDone(name)) {
+  private def commit(name: String, fingerprint: String): Unit = {
+    val m = doneMarker(name)
+    val out = fs(m).create(m, true)
+    try out.write(fingerprint.getBytes(UTF_8)) finally out.close()
+  }
+
+  /** Run (or skip) a stage: returns the materialized stage output.
+    * `fingerprint` names the parameters the output depends on beyond its
+    * inputs (stage 4's threshold, say). It is the done marker's content,
+    * so a committed stage whose fingerprint differs is recomputed, never
+    * served for the new parameters. */
+  def stage(name: String, fingerprint: String = "")(compute: => DataFrame): DataFrame = {
+    if (!isDone(name, fingerprint)) {
       compute.write.mode(SaveMode.Overwrite).parquet(dir(name))
-      val m = doneMarker(name)
-      fs(m).create(m, true).close()
+      commit(name, fingerprint)
     }
     spark.read.parquet(dir(name))
   }
@@ -75,8 +91,7 @@ final class Pipeline(spark: SparkSession, root: String) {
       compute.write.mode(SaveMode.Overwrite)
         .bucketBy(buckets, key).sortBy(key)
         .option("path", dir(name)).format("parquet").saveAsTable(table)
-      val m = doneMarker(name)
-      fs(m).create(m, true).close()
+      commit(name, "")
     }
     spark.table(table)
   }

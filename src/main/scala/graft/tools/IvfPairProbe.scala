@@ -12,7 +12,7 @@ object IvfPairProbe {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val exact = graft.operators.Similarity
-      .nearDupPairs(spark, sfDir, 0.35, prefilterLabel = false)
+      .nearDupPairs(spark, sfDir, 0.35)
       .select(col("id1"), col("id2")).cache()
     val total = exact.count()
     for (np <- Seq(1, 2, 3, 4, 6)) {

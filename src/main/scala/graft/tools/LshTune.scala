@@ -12,7 +12,7 @@ object LshTune {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val exact = graft.operators.Similarity
-      .nearDupPairs(spark, sfDir, 0.35, prefilterLabel = false)
+      .nearDupPairs(spark, sfDir, 0.35)
       .select(col("id1"), col("id2")).cache()
     val total = exact.count()
     for (nt <- Seq(5, 8, 12); bl <- Seq(1.0, 0.5, 0.25, 0.1)) {

@@ -16,7 +16,7 @@ object MpLshTune {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val exact = graft.operators.Similarity
-      .nearDupPairs(spark, sfDir, 0.35, prefilterLabel = false)
+      .nearDupPairs(spark, sfDir, 0.35)
       .select(col("id1"), col("id2")).cache()
     val total = exact.count()
     def run(nt: Int, pr: Int, threshold: Double) =

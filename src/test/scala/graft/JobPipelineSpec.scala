@@ -2,10 +2,19 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** End-to-end composed pipeline (the reference's main.py equivalent). */
-class JobPipelineSpec extends SparkSpec {
+class JobPipelineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
+
+  private def pairSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
 
   test("full pipeline runs, produces canonical thresholded pairs + sinks, resumes from cache") {
     val work = Files.createTempDirectory("graft_jobpipe_spec").toString
@@ -94,5 +103,53 @@ class JobPipelineSpec extends SparkSpec {
     val recall = lsh.intersect(exact).size.toDouble / exact.size
     assert(recall >= 0.99, s"LSH-path pair recall $recall vs exact (${exact.size})")
     assert((lsh -- exact).isEmpty, "LSH verify stage must not invent pairs")
+  }
+
+  test("stage 4 is threshold-aware: a committed s4 at another threshold is recomputed") {
+    val work = Files.createTempDirectory("graft_jobpipe_tau").toString
+    val fresh = Files.createTempDirectory("graft_jobpipe_tau_fresh").toString
+    val loose = pairSet(JobPipeline.run(spark, sfTiny, work, threshold = 0.5))
+    val rerun = pairSet(JobPipeline.run(spark, sfTiny, work, threshold = 0.8))
+    val want = pairSet(JobPipeline.run(spark, sfTiny, fresh, threshold = 0.8))
+    assert(loose.exists(_._3 < 0.8), "fixture has no pair between the two thresholds")
+    assert(rerun == want, "s4_pairs committed at 0.5 was served for 0.8")
+    // the commit point stays where resume tooling expects it
+    val marker = java.nio.file.Paths.get(s"$work/s4_pairs/_DONE")
+    assert(Files.readString(marker) == "threshold=0.8")
+  }
+
+  private def s4Writes(plans: java.util.Collection[QueryExecution], work: String) =
+    plans.toArray(Array.empty[QueryExecution]).filter(qe => find(qe.executedPlan) {
+      case DataWritingCommandExec(c: InsertIntoHadoopFsRelationCommand, _) =>
+        c.outputPath.toString.endsWith(s"$work/s4_pairs")
+      case _ => false
+    }.isDefined)
+
+  test("stage 4's exact route joins blocks, not pairs: nested-loop rows <= nb(nb+1)/2") {
+    val work = Files.createTempDirectory("graft_jobpipe_plan").toString
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val nPairs = try JobPipeline.run(spark, sfTiny, work, threshold = 0.5).count()
+    finally {
+      // listener events arrive on the bus thread; wait for the s4 write
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (s4Writes(plans, work).isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+      spark.listenerManager.unregister(listener)
+    }
+    val s4 = s4Writes(plans, work)
+    assert(s4.length == 1, s"expected one s4_pairs write, got ${s4.length}")
+    val joins = collectWithSubqueries(s4.head.executedPlan) {
+      case j: BroadcastNestedLoopJoinExec => j
+    }
+    assert(joins.length == 1, s"expected one nested-loop join in stage 4:\n${s4.head.executedPlan}")
+    val nb = operators.Similarity.exactPairBlocks(spark)
+    val rows = joins.head.metrics("numOutputRows").value
+    assert(rows > 0 && rows <= nb * (nb + 1) / 2,
+      s"stage 4 joined $rows rows; block pairs are at most ${nb * (nb + 1) / 2} (nb=$nb)")
+    assert(nPairs > 0)
   }
 }

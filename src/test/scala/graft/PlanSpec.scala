@@ -3,16 +3,16 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.{SparkPlan, TakeOrderedAndProjectExec}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
-import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec}
 
 /** Plan-shape contracts — the scale properties COVERAGE/SCALE claim, as
   * executable assertions instead of prose: column pruning and filter
   * pushdown reach the parquet scan, dimension joins broadcast, global
   * top-k plans as TakeOrderedAndProject (never a full sort), and the
   * quadratic baselines are the only cross joins in the registry. */
-class PlanSpec extends SparkSpec {
+class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def executed(df: DataFrame): SparkPlan =
     df.queryExecution.executedPlan match {
@@ -30,6 +30,21 @@ class PlanSpec extends SparkSpec {
     readSchemas.foreach { rs =>
       assert(!rs.contains("label"), s"label not pruned from scan: $rs")
     }
+  }
+
+  test("q31 joins blocks, not pairs: nested-loop rows <= nb(nb+1)/2 per execution") {
+    val df = Registry.byName("q31_neardup_pairs").run(spark, sfTiny)
+    assert(df.collect().nonEmpty) // runs df's own plan, so its metrics fill
+    val joins = collect(df.queryExecution.executedPlan) {
+      case j: BroadcastNestedLoopJoinExec => j
+    }
+    assert(joins.length == 1, s"expected one nested-loop join:\n${df.queryExecution.executedPlan}")
+    val nb = operators.Similarity.exactPairBlocks(spark)
+    val rows = joins.head.metrics("numOutputRows").value
+    // the final sort's range-partition sample runs the join a second
+    // time; a join of one row per pair would count ~N²/2 = 124,750 here
+    assert(rows > 0 && rows <= 2 * (nb * (nb + 1) / 2),
+      s"q31 joined $rows rows; block pairs are ${nb * (nb + 1) / 2} per execution (nb=$nb)")
   }
 
   test("q02 pushes its predicate into the parquet scan") {
