@@ -48,12 +48,12 @@ object JobPipeline {
         .select(col("doc_id"), col("text"))
     }
 
-    // Stage 2 — embed: deterministic TF-IDF pipeline, unit-normalized
+    // Stage 2 — embed: deterministic hashed TF-IDF, unit-normalized
     // (app/generate_embeddings.py:25-50; M1 stand-in)
     val embedded = pipe.stage("s2_embed") {
-      // the clean frame is a deterministic function of (dataset, stage 1),
-      // so the fitted model may be cached/persisted under that identity
-      operators.Embedding.embedDocs(clean, Some(s"$sfDir#s1_preprocess"))
+      // the clean frame is stage 1 of the dataset at sfDir, so the fitted
+      // model may be cached/persisted under sfDir's content fingerprint
+      operators.Embedding.embedDocs(clean, Some((sfDir, "s1_preprocess")))
     }
 
     // Stage 3 — "index add": persist the searchable vector table keyed by

@@ -1,20 +1,25 @@
 package graft.operators
 
-import org.apache.spark.ml.{Pipeline, PipelineModel}
-import org.apache.spark.ml.feature.{HashingTF, IDF, Normalizer, RegexTokenizer}
+import java.io.{DataInputStream, DataOutputStream}
+
 import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{GraftConf, GraftQuery, Tables}
-import graft.functions.GramianAggregator
+import graft.functions.{GramianAggregator, TfIdfFunctions, TfIdfKernels}
 
 /** M1 — text -> embedding. The reference encodes with a sentence
   * transformer (app/generate_embeddings.py:25-50, all-MiniLM-L6-v2,
   * 384-d L2-normalized float32); a transformer needs an external model
-  * server, so the engine's public-knowledge stand-in is the classic
-  * sparse-projection pipeline: RegexTokenizer -> HashingTF -> IDF ->
-  * Normalizer(p=2), dimension from GraftConf.embeddingDim (reference
-  * default 384; specs pin 64 to match the synthetic embeddings table).
+  * server, so the engine's public-knowledge stand-in is classic hashed
+  * TF-IDF: whitespace tokens of the lowercased text, murmur3-hashed into
+  * GraftConf.embeddingDim buckets (reference default 384; specs pin 64
+  * to match the synthetic embeddings table), weighted by IDF and
+  * L2-normalized. It is the output of MLlib's RegexTokenizer ->
+  * HashingTF -> IDF -> Normalizer(p=2) chain, bit for bit, computed by
+  * one native kernel ([[graft.functions.TfIdfKernels]]): the fit is one
+  * pass summing per-partition document-frequency arrays, the transform
+  * one codegen'd projection ([[graft.functions.TfIdfEmbed]]).
   * The contract the rest of the engine relies on is
   * identical: a deterministic, L2-normalized fixed-dim vector per
   * document, co-located with its key (no positional id_map — the
@@ -22,22 +27,27 @@ import graft.functions.GramianAggregator
   * is structurally impossible here).
   *
   * Not SQL-expressible (murmur3 feature hashing), so no DuckDB oracle;
-  * EmbeddingSpec asserts unit norms, determinism, and that near-dup text
-  * pairs embed closer than random pairs. */
+  * EmbeddingSpec asserts the MLlib chain's output bit for bit (the chain
+  * lives in test code as the reference), unit norms, determinism, and
+  * that near-dup text pairs embed closer than random pairs. */
 object Embedding {
 
   /** Configured output dimension (spark.graft.embedding.dim). */
   def dim(s: SparkSession): Int = GraftConf.embeddingDim(s)
 
+  /** The fitted state: one IDF weight per hash bucket and the number of
+    * documents they were fit on. */
+  private final case class IdfModel(numDocs: Long, idf: Array[Double])
+
   // fit-once-embed-many (S6 parity for M1, same policy as Ann's
   // quantizer): IDF's fit is an extra full corpus scan, so the fitted
-  // PipelineModel is an index artifact, not part of any single query.
+  // weights are an index artifact, not part of any single query.
   // One fit per (session, dataset, dim) per JVM; with
   // spark.graft.index.dir set, one fit per CLUSTER, loaded thereafter
   // (reference persists the encoder output the same way,
   // app/generate_embeddings.py + vector_search.py:207-294).
   private val modelCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), PipelineModel]
+    scala.collection.concurrent.TrieMap.empty[(String, String), IdfModel]
 
   private def sessionKey(s: SparkSession): String =
     System.identityHashCode(s).toString
@@ -50,45 +60,68 @@ object Embedding {
     modelCache.clear(); w2vCache.clear(); pcaCache.clear()
   }
 
-  private def fitModel(docs: DataFrame, dim: Int): PipelineModel = {
+  /** The IDF fit: one Spark job over the texts' internal rows, one
+    * document-frequency array per partition, folded into one. */
+  private def fit(docs: DataFrame, dim: Int): IdfModel = {
     fitCount.incrementAndGet()
-    new Pipeline().setStages(Array(
-      new RegexTokenizer().setInputCol("text").setOutputCol("toks")
-        .setPattern("\\s+").setToLowercase(true),
-      new HashingTF().setInputCol("toks").setOutputCol("tf").setNumFeatures(dim),
-      new IDF().setInputCol("tf").setOutputCol("tfidf"),
-      new Normalizer().setInputCol("tfidf").setOutputCol("emb").setP(2.0)))
-      .fit(docs)
+    val df = docs.select(col("text")).queryExecution.toRdd
+      .mapPartitions(rows => Iterator.single(TfIdfKernels.docFreq(
+        rows.map(r => if (r.isNullAt(0)) null else r.getUTF8String(0)), dim)))
+      .fold(new Array[Long](dim + 1)) { (a, b) =>
+        var j = 0
+        while (j < a.length) { a(j) += b(j); j += 1 }
+        a
+      }
+    IdfModel(df(dim), TfIdfKernels.idf(df))
   }
 
-  /** The fitted model for (dataset key, dim): session cache first, then
-    * the persisted artifact, then fit (and save if persistence is on).
-    * `key=None` (anonymous frame) always fits — there is no sound cache
-    * identity for arbitrary intermediate frames. */
-  private def model(docs: DataFrame, key: Option[String], dim: Int): PipelineModel = {
+  // The persisted artifact ("embed_idf"): one small file. The kind is
+  // new with this format, so an MLlib PipelineModel dir saved under the
+  // old "embed_pipeline" kind is never looked at, let alone misread.
+  private val IdfFormat = "graft-embed-idf-v1"
+
+  private def writeIdf(out: DataOutputStream, m: IdfModel): Unit = {
+    out.writeUTF(IdfFormat); out.writeInt(m.idf.length); out.writeLong(m.numDocs)
+    m.idf.foreach(out.writeDouble)
+  }
+
+  private def readIdf(dim: Int)(in: DataInputStream): IdfModel = {
+    require(in.readUTF() == IdfFormat, "not an IDF artifact")
+    require(in.readInt() == dim, "IDF artifact of another dimension")
+    val m = in.readLong()
+    IdfModel(m, Array.fill(dim)(in.readDouble()))
+  }
+
+  /** The fitted model for (dataset, derivation, dim): session cache
+    * first, then the persisted artifact, then fit (and save if
+    * persistence is on). `key=None` (anonymous frame) always fits —
+    * there is no sound cache identity for arbitrary intermediate
+    * frames. */
+  private def model(docs: DataFrame, key: Option[(String, String)], dim: Int): IdfModel = {
     val s = docs.sparkSession
     key match {
-      case Some(k) =>
-        graft.FitTiming.cachedOrFit(modelCache, (sessionKey(s), s"$k@dim=$dim"))(
-          ModelStore.loadOrFit(s,
-            ModelStore.artifactPath(s, "embed_pipeline", k, s"dim=$dim"),
-            PipelineModel.load)(fitModel(docs, dim)))
-      case None => fitModel(docs, dim)
+      case Some((d, derivation)) =>
+        val params = (if (derivation.isEmpty) "" else s"$derivation,") + s"dim=$dim"
+        graft.FitTiming.cachedOrFit(modelCache, (sessionKey(s), s"$d@$params"))(
+          ModelStore.loadOrFitFile(s, ModelStore.artifactPath(s, "embed_idf", d, params),
+            readIdf(dim), writeIdf)(fit(docs, dim)))
+      case None => fit(docs, dim)
     }
   }
 
-  /** Fit-or-load + apply the embedding pipeline; (doc_id, embedding). */
+  /** Fit-or-load + apply the embedding; (doc_id, embedding). */
   def embed(s: SparkSession, d: String): DataFrame =
-    embedDocs(Tables.documents(s, d).select(col("doc_id"), col("text")), Some(d))
+    embedDocs(Tables.documents(s, d).select(col("doc_id"), col("text")), Some((d, "")))
 
   /** Same, over any (doc_id, text) frame (the composed-pipeline entry).
-    * Pass `cacheKey` when the frame is a deterministic function of a
-    * dataset (e.g. a pipeline stage) so the fitted model is cached and
-    * persisted under that identity. */
-  def embedDocs(docs: DataFrame, cacheKey: Option[String] = None): DataFrame = {
-    val d = GraftConf.embeddingDim(docs.sparkSession)
-    model(docs, cacheKey, d).transform(docs)
-      .select(col("doc_id"), vector_to_array(col("emb")).as("embedding"))
+    * Pass `cacheKey = (dir, derivation)` when the frame is a
+    * deterministic function, named by `derivation` ("" for the
+    * documents table itself), of the dataset at `dir` (a pipeline stage,
+    * say): the fitted model is then cached and persisted under the dir's
+    * content fingerprint. */
+  def embedDocs(docs: DataFrame, cacheKey: Option[(String, String)] = None): DataFrame = {
+    val m = model(docs, cacheKey, GraftConf.embeddingDim(docs.sparkSession))
+    docs.select(col("doc_id"), TfIdfFunctions.tfidfEmbed(col("text"), m.idf).as("embedding"))
   }
 
   /** Alternative M1 backend: Word2Vec (dense learned vectors, the other
@@ -125,11 +158,11 @@ object Embedding {
   }
 
   /** q39: embedding-stage invariant profile — the vectors themselves
-    * are murmur3-HashingTF outputs no SQL engine can replay, but the
+    * are murmur3-hashed TF-IDF outputs no SQL engine can replay, but the
     * pipeline's CONTRACT is fully checkable: every document embeds
     * (n_docs), every embedding is exactly conf-dim wide (n_dim_ok), and
-    * every vector is unit-norm or exactly zero (n_norm_ok — the
-    * Normalizer stage; zero when IDF kills every term of a doc). The
+    * every vector is unit-norm or exactly zero (n_norm_ok — the L2
+    * normalization; zero when IDF kills every term of a doc). The
     * Spark side computes all three from the real vectors; the DuckDB
     * oracle states each must equal count(*) of documents — the
     * shape-invariant oracle round 6 asked for. Per-vector assertions

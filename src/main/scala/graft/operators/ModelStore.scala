@@ -1,12 +1,14 @@
 package graft.operators
 
+import java.io.{DataInputStream, DataOutputStream, IOException}
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.ml.util.MLWritable
 import org.apache.spark.sql.SparkSession
 import graft.GraftConf
 
 /** S6 model persistence, shared by every fitted-model operator (the ANN
-  * quantizer and LSH tables in [[Ann]], the M1 embedding pipeline in
+  * quantizer and LSH tables in [[Ann]], the M1 IDF weights in
   * [[Embedding]]): with `spark.graft.index.dir` set, a fit is saved once
   * and every later JVM loads the artifact instead of refitting — the
   * Spark-native form of the reference's faiss.write_index/read_index
@@ -22,7 +24,7 @@ private[graft] object ModelStore {
   // would keep serving models fitted on the previous generation's data.
   // Baked into the artifact path, a regeneration simply misses the cache
   // and refits — no stale-model hazard, no manual invalidation.
-  private val fpCache = scala.collection.concurrent.TrieMap.empty[String, String]
+  private val fpCache = scala.collection.concurrent.TrieMap.empty[String, Option[String]]
 
   /** Drop the memoized dataset fingerprints — wired into Ann.clearCaches
     * (the "new JVM" hook), so a dataset regenerated under the same path
@@ -30,28 +32,42 @@ private[graft] object ModelStore {
     * the previous generation's content (VERDICT r12 Missing #3). */
   private[graft] def clearFingerprints(): Unit = fpCache.clear()
 
-  private def datasetFingerprint(s: SparkSession, d: String): String =
+  // Every `.parquet` entry of the dir: a file, or a table dir whose
+  // files are listed in turn (name, length, mtime). None when the dir
+  // cannot be listed: then there is no content identity to key on.
+  private def datasetFingerprint(s: SparkSession, d: String): Option[String] =
     fpCache.getOrElseUpdate(d, {
       try {
         val p = new Path(d)
         val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
         val sig = fs.listStatus(p).filter(_.getPath.getName.endsWith(".parquet"))
           .sortBy(_.getPath.getName)
-          .map(f => s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}")
+          .flatMap { e =>
+            val name = e.getPath.getName
+            if (!e.isDirectory) Array(s"$name:${e.getLen}:${e.getModificationTime}")
+            else fs.listStatus(e.getPath).filter(_.isFile).sortBy(_.getPath.getName)
+              .map(f => s"$name/${f.getPath.getName}:${f.getLen}:${f.getModificationTime}")
+          }
           .mkString("|")
-        java.lang.Long.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(sig).toLong & 0xffffffffL)
-      } catch { case _: Exception => "nofp" }
+        Some(java.lang.Long.toHexString(
+          scala.util.hashing.MurmurHash3.stringHash(sig).toLong & 0xffffffffL))
+      } catch { case _: IOException | _: IllegalArgumentException => None }
     })
 
   /** Artifact path for a (kind, dataset, fit-params) triple, if
-    * persistence is configured. The dataset segment carries a content
-    * fingerprint so artifacts self-invalidate when the data changes. */
+    * persistence is configured and the dataset dir can be fingerprinted.
+    * The dataset segment carries a content fingerprint so artifacts
+    * self-invalidate when the data changes; a dir that cannot be listed
+    * (a missing path, say) gets no artifact rather than one shared by
+    * every such dir. */
   def artifactPath(s: SparkSession, kind: String, d: String,
       params: String): Option[String] =
-    GraftConf.indexDir(s).map { root =>
+    for {
+      root <- GraftConf.indexDir(s)
+      fp <- datasetFingerprint(s, d)
+    } yield {
       val ds = d.replaceAll("[^A-Za-z0-9._-]", "_")
-      s"$root/$kind/${ds}_${datasetFingerprint(s, d)}/$params"
+      s"$root/$kind/${ds}_$fp/$params"
     }
 
   /** True if a saved MLlib model artifact is present (MLWriter commits
@@ -68,6 +84,35 @@ private[graft] object ModelStore {
     path match {
       case Some(p) if artifactExists(s, p) => load(p)
       case Some(p) => val m = fit; m.write.overwrite().save(p); m
+      case None => fit
+    }
+
+  /** [[loadOrFit]] for a model small enough for one file, read and
+    * written through the FileSystem, so neither runs a Spark job. The
+    * file is written aside and renamed into place; one that `read`
+    * cannot parse (a torn write, another format) is refit and replaced,
+    * never served. */
+  def loadOrFitFile[M](s: SparkSession, path: Option[String],
+      read: DataInputStream => M, write: (DataOutputStream, M) => Unit)(fit: => M): M =
+    path match {
+      case Some(p) =>
+        val file = new Path(p)
+        val fs = file.getFileSystem(s.sparkContext.hadoopConfiguration)
+        val loaded =
+          if (!fs.exists(file)) None
+          else try {
+            val in = new DataInputStream(fs.open(file))
+            try Some(read(in)) finally in.close()
+          } catch { case _: IOException | _: IllegalArgumentException => None }
+        loaded.getOrElse {
+          val m = fit
+          val tmp = new Path(p + ".tmp")
+          val out = new DataOutputStream(fs.create(tmp, true))
+          try write(out, m) finally out.close()
+          fs.delete(file, false)
+          fs.rename(tmp, file)
+          m
+        }
       case None => fit
     }
 }

@@ -62,6 +62,10 @@ object Similarity {
     exactPairs(Tables.embeddings(s, d), "vec_id", "embedding", threshold)
       .filter(col("cos") >= threshold)
       .select(col("id1"), col("id2"), round(col("cos"), 4).as("sim"))
+      // the sort's range partitioner samples its input in a job of its
+      // own; with a shuffle below it, that job reads the shuffle's
+      // output instead of running the block join a second time
+      .repartition(col("id1"))
       .orderBy(col("sim").desc, col("id1"), col("id2"))
 
   /** Block count of [[exactPairs]], from the session's parallelism:

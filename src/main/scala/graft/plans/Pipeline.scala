@@ -77,21 +77,30 @@ final class Pipeline(spark: SparkSession, root: String) {
     * data at the stage dir): the "shuffle once at ingest, never per
     * query" layout — every downstream equi-join on `key` reads this side
     * with zero Exchange (asserted by JobPipelineSpec/BucketingSpec).
-    * Bucket metadata lives in the session catalog; a fresh session that
-    * finds the commit marker but no catalog entry rewrites the stage
-    * from its (already materialized) inputs — a local layout rebuild,
-    * not a recomputation of upstream stages. */
+    * Bucket metadata lives in the session catalog, and the commit
+    * marker records it (`key=…,n=…`). A fresh session that finds a
+    * matching marker but no catalog entry re-registers the committed
+    * files with their footer schema: DDL, no rewrite. A marker written
+    * for another layout (or none) rewrites the stage from its (already
+    * materialized) inputs. */
   def stageBucketed(name: String, key: String, buckets: Int)
       (compute: => DataFrame): DataFrame = {
     val table = bucketedTableName(name)
-    if (!isDone(name) || !spark.catalog.tableExists(table)) {
+    val layout = s"key=$key,n=$buckets"
+    if (!isDone(name, layout)) {
       spark.sql(s"DROP TABLE IF EXISTS $table")
       // the _DONE marker is underscore-prefixed, so parquet readers treat
       // it as hidden metadata and the table dir stays self-contained
       compute.write.mode(SaveMode.Overwrite)
         .bucketBy(buckets, key).sortBy(key)
         .option("path", dir(name)).format("parquet").saveAsTable(table)
-      commit(name, "")
+      commit(name, layout)
+    } else if (!spark.catalog.tableExists(table)) {
+      // Spark's DDL takes a bucket clause only with a column list
+      val schema = spark.read.parquet(dir(name)).schema.toDDL
+      spark.sql(s"""CREATE TABLE $table ($schema) USING parquet
+        CLUSTERED BY ($key) SORTED BY ($key) INTO $buckets BUCKETS
+        LOCATION '${dir(name)}'""")
     }
     spark.table(table)
   }

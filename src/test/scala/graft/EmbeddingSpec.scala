@@ -1,12 +1,99 @@
 package graft
 
+import org.apache.spark.ml.Pipeline
+import org.apache.spark.ml.feature.{HashingTF, IDF, Normalizer, RegexTokenizer}
+import org.apache.spark.ml.functions.vector_to_array
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.Embedding
+import graft.operators.{Embedding, ModelStore}
 import graft.functions.VectorKernels._
 
 /** M1 embedding-stage contract (no SQL oracle possible — murmur3 feature
-  * hashing — so the guarantees live here). */
+  * hashing — so the guarantees live here). The reference for the native
+  * kernel is MLlib's RegexTokenizer -> HashingTF -> IDF -> Normalizer
+  * chain, which exists only here. */
 class EmbeddingSpec extends SparkSpec {
+
+  private def mllibEmbed(docs: DataFrame, dim: Int): DataFrame =
+    new Pipeline().setStages(Array(
+      new RegexTokenizer().setInputCol("text").setOutputCol("toks")
+        .setPattern("\\s+").setToLowercase(true),
+      new HashingTF().setInputCol("toks").setOutputCol("tf").setNumFeatures(dim),
+      new IDF().setInputCol("tf").setOutputCol("tfidf"),
+      new Normalizer().setInputCol("tfidf").setOutputCol("emb").setP(2.0)))
+      .fit(docs).transform(docs)
+      .select(col("doc_id"), vector_to_array(col("emb")).as("embedding"))
+
+  private def withDim[T](dim: Int)(body: => T): T = {
+    spark.conf.set("spark.graft.embedding.dim", dim.toString)
+    try body finally spark.conf.unset("spark.graft.embedding.dim")
+  }
+
+  /** doc_id -> raw bits of every element. */
+  private def bits(df: DataFrame): Map[Long, Seq[Long]] =
+    df.collect().map(r => r.getLong(0) ->
+      r.getSeq[Double](1).map(java.lang.Double.doubleToRawLongBits)).toMap
+
+  private def assertBitwiseMllib(docs: DataFrame, dim: Int, what: String): Map[Long, Seq[Long]] = {
+    val got = withDim(dim)(bits(Embedding.embedDocs(docs)))
+    val want = bits(mllibEmbed(docs, dim))
+    assert(got.keySet == want.keySet, s"$what dim=$dim: doc ids differ")
+    want.foreach { case (id, w) =>
+      assert(got(id) == w, s"$what dim=$dim doc $id: ${got(id).take(8)} != ${w.take(8)}")
+    }
+    got
+  }
+
+  private def docsOf(texts: String*): DataFrame = {
+    val s = spark
+    import s.implicits._
+    texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+  }
+
+  private val edgeTexts = Seq(
+    "alpha\tbeta\ngamma\u000Bdelta\fepsilon\rzeta",
+    "   leading and trailing whitespace   ",
+    "\t\n mixed \r\n\u000B\f runs\t\t of\n\nwhitespace \r",
+    "",
+    " \t\n\u000B\f\r ",
+    "ÉCOLE Straße ΣΟΦΙΑ naïve 日本語 テキスト 😀 İstanbul ǅ",
+    "ÀÉÎÕÜ àéîõü ÀÉÎÕÜ Ωmega ωMEGA",
+    "nbsp\u00A0joins file\u001Csep HELLO Hello hello",
+    "alpha beta alpha beta alpha gamma")
+
+  test("the native kernel equals MLlib's chain bit for bit on sfTiny, dims 1/7/64/384") {
+    val docs = Tables.documents(spark, sfTiny).select(col("doc_id"), col("text"))
+    Seq(1, 7, 64, 384).foreach(d => assertBitwiseMllib(docs, d, "sfTiny"))
+  }
+
+  test("the native kernel equals MLlib's chain on whitespace, case and UTF-8 edge texts") {
+    Seq(1, 7, 64, 384).foreach { d =>
+      val got = assertBitwiseMllib(docsOf(edgeTexts: _*), d, "edge texts")
+      // the empty and the all-whitespace text have no tokens
+      Seq(3L, 4L).foreach(id => assert(got(id).forall(_ == 0L), s"doc $id not zero at dim=$d"))
+    }
+  }
+
+  test("a token in every document has idf 0; a document of only that token embeds as zero") {
+    val docs = docsOf("shared x", "shared y z", "shared", "SHARED shared x")
+    val got = assertBitwiseMllib(docs, 384, "shared token")
+    assert(got(2L).forall(_ == 0L), "idf-0 token left a non-zero vector")
+    assert(got(0L).exists(_ != 0L))
+  }
+
+  test("null text embeds as the zero vector and fits as an empty document") {
+    val s = spark
+    import s.implicits._
+    val texts = Seq[Option[String]](Some("alpha beta"), None, Some("beta gamma"), Some("gamma"))
+    val withNull = texts.zipWithIndex.map { case (t, i) => (i.toLong, t.orNull) }
+      .toDF("doc_id", "text")
+    val withEmpty = texts.zipWithIndex.map { case (t, i) => (i.toLong, t.getOrElse("")) }
+      .toDF("doc_id", "text")
+    val got = withDim(64)(bits(Embedding.embedDocs(withNull)))
+    assert(got(1L).length == 64 && got(1L).forall(_ == 0L))
+    assert(got == withDim(64)(bits(Embedding.embedDocs(withEmpty))),
+      "null text must weigh in the fit as the empty string does")
+  }
 
   test("embeddings are unit-norm, fixed-dim, deterministic") {
     val e1 = Embedding.embed(spark, sfTiny).collect().sortBy(_.getLong(0))
@@ -44,6 +131,36 @@ class EmbeddingSpec extends SparkSpec {
       assert(rows > 0)
       assert(Embedding.fitCount.get() == c0,
         "artifact present but the model was refit")
+    } finally {
+      spark.conf.unset("spark.graft.index.dir")
+      Embedding.clearCaches()
+    }
+  }
+
+  test("a stray legacy embed_pipeline dir is ignored; a torn artifact is refit, never served") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_embed_legacy").toString
+    spark.conf.set("spark.graft.index.dir", dir)
+    Embedding.clearCaches()
+    try {
+      val dim = GraftConf.embeddingDim(spark)
+      def put(kind: String, rel: String, bytes: Array[Byte]): Unit = {
+        val p = java.nio.file.Paths.get(
+          ModelStore.artifactPath(spark, kind, sfTiny, s"dim=$dim").get, rel)
+        java.nio.file.Files.createDirectories(p.getParent)
+        java.nio.file.Files.write(p, bytes)
+      }
+      // what the MLlib form left behind: a PipelineModel dir, here junk
+      put("embed_pipeline", "metadata/part-00000", "{not a model".getBytes("UTF-8"))
+      // a torn write of the current artifact
+      put("embed_idf", "", Array[Byte](0, 3, 'g', 'r'))
+      val want = bits(mllibEmbed(
+        Tables.documents(spark, sfTiny).select(col("doc_id"), col("text")), dim))
+      val c0 = Embedding.fitCount.get()
+      assert(bits(Embedding.embed(spark, sfTiny)) == want)
+      assert(Embedding.fitCount.get() == c0 + 1, "a torn artifact was served")
+      Embedding.clearCaches() // "new JVM": the rewritten artifact loads
+      assert(bits(Embedding.embed(spark, sfTiny)) == want)
+      assert(Embedding.fitCount.get() == c0 + 1, "the rewritten artifact did not load")
     } finally {
       spark.conf.unset("spark.graft.index.dir")
       Embedding.clearCaches()
